@@ -32,22 +32,26 @@ object Tables {
     * everywhere this engine reads: the driver's testdata is read-only
     * and test fixtures use fresh temp dirs per suite. Writers that DO
     * regenerate a path in-session (none today) must call
-    * [[clearCache]]. */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Drop this session's memoized load plans (lifecycle hook, same
-    * contract as the module clearCaches hooks — needed only if a
-    * session rewrites a table path it already loaded). */
-  def clearCache(spark: SparkSession): Unit =
-    loadCache.keySet.removeIf(_._1 eq spark)
+    * [[SessionMemo.release]]. */
+  private val loadMemo = SessionMemo.values[(String, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadCache.computeIfAbsent((spark, dir, name), { _ =>
+    loadMemo(spark, (dir, name)) {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       val norm = if (name == "events") normalizeEventTs(df) else df
       if (KernelTables(name)) balance(spark, norm) else norm
-    })
+    }
+
+  private val rowCountMemo = SessionMemo.values[(String, String), java.lang.Long]()
+
+  /** Row count of `$dir/$table.parquet`, memoized per session. Reads
+    * the parquet directly (not [[load]]), so the count is a
+    * metadata-only job: [[balance]] would put a repartition shuffle
+    * under it. */
+  def rowCount(spark: SparkSession, dir: String, table: String): Long =
+    rowCountMemo(spark, (dir, table)) {
+      Long.box(spark.read.parquet(s"$dir/$table.parquet").count())
+    }
 
   /** Tables whose consumers are CPU-bound per-row kernels (shingling,
     * minhash, BPE, PII scrub, dot products) rather than

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{IndexStore, Tables}
+import graft.{IndexStore, SessionMemo, Tables}
 import graft.operators.ConnectedComponents
 
 /** The PERSISTED form of the near-dup machinery's standing state —
@@ -77,15 +77,13 @@ object BandIndex {
     * kernel per invocation. The memo's lineage hashes ONLY the batch
     * half, so the indexed plans' "no corpus-side signature pass"
     * contract (BandIndexSpec's one-kernel pin) is untouched. */
-  private val batchBandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val batchBandsMemo = SessionMemo.frames[String]()
 
   private[graft] def batchBands(spark: SparkSession, dir: String): DataFrame =
-    batchBandsCache.computeIfAbsent((spark, dir), { _ =>
+    batchBandsMemo(spark, dir) {
       Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
           Dedup.cachedDocShingles(spark, dir).filter(batchFilter)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The indexed acceptance decision, parameterized by WHICH corpus
     * band frame plays the index — [[minhashIncrementalIndexed]] passes
@@ -159,8 +157,7 @@ object BandIndex {
     * module's stated 100 TB posture — round-9 advice). */
   val ClusterBroadcastMaxRows = 1000000L
 
-  private val clusterCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
+  private val clusterCountMemo = SessionMemo.values[String, java.lang.Long]()
 
   /** [[Dedup.neardupClusters]] over the stored label artifact — the
     * session that ANSWERS cluster queries is rarely the session that
@@ -171,8 +168,7 @@ object BandIndex {
     val comp = storedComponents(spark, dir)
     val sizes = comp.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
-    val nClusters = clusterCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(sizes.count()) }).longValue()
+    val nClusters = clusterCountMemo(spark, dir)(Long.box(sizes.count())).longValue()
     val hinted =
       if (nClusters <= ClusterBroadcastMaxRows) broadcast(sizes)
       else sizes.hint("merge")
@@ -273,7 +269,7 @@ object BandIndex {
   }
 
   /** Session-memoized resolution of the RETRACTED pair graph — the
-    * [[Dedup.neardupComponents]] clusterCache discipline applied to the
+    * [[Dedup.neardupComponents]] memo discipline applied to the
     * erased-free graph (round-16 optimization): the label propagation
     * is a ~12-job synchronous loop (measured 2.3 s warm at sf0.1, the
     * bulk of `index_retract`), and its input — the memoized pair frame
@@ -282,14 +278,7 @@ object BandIndex {
     * declared operation (every run publishes a fresh versioned
     * artifact) while paying the resolution where every other cluster
     * query pays it: once. */
-  private val retractedCcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark, Seq(retractedCcCache, batchBandsCache))
-    clusterCountCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
+  private val retractedComponentsMemo = SessionMemo.frames[String]()
 
   /** The retracted CC label artifact: a fresh resolution over the
     * near-dup pair graph with every pair touching an erased doc
@@ -297,11 +286,11 @@ object BandIndex {
     * artifact. Returned for the spec; `index_retract`'s oracle covers
     * the band side, this covers the label side. */
   private[graft] def retractedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val resolved = retractedCcCache.computeIfAbsent((spark, dir), { _ =>
+    val resolved = retractedComponentsMemo(spark, dir) {
       val pairs = Dedup.cachedMinhashPairs(spark, dir)
         .filter(!(col("d1") % 10 === 4) && !(col("d2") % 10 === 4))
       ConnectedComponents.resolve(pairs.select("d1", "d2"), "d1", "d2")
-    })
+    }
     IndexStore.writeVersioned(spark, dir, "documents", "neardup_cc_labels_retracted",
       resolved, Dedup.MinhashIndexParams)
   }

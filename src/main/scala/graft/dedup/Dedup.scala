@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.ConnectedComponents
 
 /** Deduplication operators for a training-data pipeline, smallest to
@@ -93,27 +93,10 @@ object Dedup {
     * cache at one entry per corpus and makes repeated queries reuse
     * it. Spark evicts MEMORY_AND_DISK blocks under pressure, so the
     * bound is a ceiling, not a pin. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val shingleMemo = SessionMemo.frames[String]()
 
   def cachedDocShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.computeIfAbsent((spark, dir), { _ =>
-      docShingles(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Explicit lifecycle hook for the session-scoped memos: unpersist
-    * and drop every cached frame belonging to `spark`. The memos are
-    * bounded (one entry per corpus) and MEMORY_AND_DISK-evictable, so
-    * the driver harness never needs this — a long-lived multi-tenant
-    * session calls it when a corpus is retired. */
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark,
-      Seq(shingleCache, bandsCache, pairsCache, clusterCache, clusterCacheAlt))
-    clusterGateCache.keySet.removeIf(_._1 eq spark)
-    docCountCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
+    shingleMemo(spark, dir)(docShingles(spark, dir))
 
   private val shinglesSql =
     """list_distinct(CASE WHEN len(ws) < 3 THEN []
@@ -472,17 +455,10 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardCapped(spark, dir, AuditMaxDocs)
 
-  /** Memoized per-corpus doc count for the audit-cap guard — the
-    * guard must not re-pay a count job on every bench rep. */
-  private val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def ngramJaccardCapped(spark: SparkSession, dir: String,
                                         maxDocs: Long): DataFrame = {
-    // zero-column parquet count (column-pruned scan over footer
-    // row-counts), memoized per corpus dir
-    val nDocs: Long = docCountMemo.computeIfAbsent(dir,
-      _ => spark.read.parquet(s"$dir/documents.parquet").count())
+    // memoized, so the guard does not re-pay a count job per bench rep
+    val nDocs = Tables.rowCount(spark, dir, "documents")
     require(nDocs <= maxDocs,
       s"ngram_jaccard is the declared O(n^2) audit-tier baseline: " +
         s"$nDocs docs exceeds the $maxDocs-doc cap (measured sf10 engine " +
@@ -634,14 +610,12 @@ object Dedup {
     * `minhash_incremental` deliberately keeps its own two per-parity
     * kernel passes — its spec-pinned contract is "recomputes both
     * sides", contrasted against the indexed form.) */
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val bandsMemo = SessionMemo.frames[String]()
 
   private[graft] def cachedCorpusBands(spark: SparkSession, dir: String): DataFrame =
-    bandsCache.computeIfAbsent((spark, dir), { _ =>
+    bandsMemo(spark, dir) {
       bandsOf(minhashSignaturesOf(spark, cachedDocShingles(spark, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Self-join candidate pairs (d1 < d2) from shared band buckets —
     * built via group-by-bucket + local pair expansion rather than a
@@ -767,17 +741,12 @@ object Dedup {
     * verified near-dup pair) but expensive to produce (the whole
     * signature pipeline). Computing pairs once and clustering the
     * materialized list is exactly how the 100 TB pipeline stages it. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val pairsMemo = SessionMemo.frames[String]()
 
   def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.computeIfAbsent((spark, dir), { _ =>
-      minhashNeardup(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    pairsMemo(spark, dir)(minhashNeardup(spark, dir))
 
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val componentsMemo = SessionMemo.frames[String]()
 
   /** (id, label) connected components of the minhash near-dup pair
     * graph — label = min doc_id of the component, which IS the elected
@@ -787,13 +756,12 @@ object Dedup {
     * resolution runs once and its persisted label frame is shared by
     * `neardup_clusters` and `training_set_select_neardup`. */
   def neardupComponents(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.computeIfAbsent((spark, dir), { _ =>
+    componentsMemo(spark, dir) {
       ConnectedComponents.resolve(
         cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
-    })
+    }
 
-  private val clusterCacheAlt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val componentsBigstarMemo = SessionMemo.frames[String]()
 
   /** [[neardupComponents]] resolved by the alternating large-star /
     * small-star algorithm ([[ConnectedComponents.resolveAlternating]])
@@ -801,13 +769,12 @@ object Dedup {
     * long-chain pair graph needs at 100 TB (O(log n) rounds vs O(n)).
     * Same memo discipline, same (id, label = component min) contract. */
   def neardupComponentsBigstar(spark: SparkSession, dir: String): DataFrame =
-    clusterCacheAlt.computeIfAbsent((spark, dir), { _ =>
+    componentsBigstarMemo(spark, dir) {
       ConnectedComponents.resolveAlternating(
         cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
-    })
+    }
 
-  private val clusterGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+  private val clusterCountMemo = SessionMemo.values[(String, String), java.lang.Long]()
 
   /** Shared (labels → clusters) tail of both resolution modes: size
     * census per label, then a CARDINALITY-GATED size join — broadcast
@@ -817,12 +784,12 @@ object Dedup {
     * of a corpus-scale cluster census is a driver OOM at 100 TB). The
     * gate count runs over the memoized, truncated label frame, so it
     * costs one cheap job, memoized per (session, corpus, mode). */
-  private def clustersFrom(comp: DataFrame,
-                           gateKey: (SparkSession, String, String)): DataFrame = {
+  private def clustersFrom(spark: SparkSession, dir: String, mode: String,
+                           comp: DataFrame): DataFrame = {
     val sizes = comp.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
-    val nClusters = clusterGateCache.computeIfAbsent(gateKey,
-      { _ => Long.box(sizes.count()) }).longValue()
+    val nClusters = clusterCountMemo(spark, (dir, mode))(Long.box(sizes.count()))
+      .longValue()
     val hinted =
       if (nClusters <= BandIndex.ClusterBroadcastMaxRows) broadcast(sizes)
       else sizes.hint("merge")
@@ -836,7 +803,7 @@ object Dedup {
     * with its cluster id (= min member id = survivor) and cluster size.
     * Docs in no near-dup pair are absent (they survive trivially). */
   def neardupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(neardupComponents(spark, dir), (spark, dir, "prop"))
+    clustersFrom(spark, dir, "prop", neardupComponents(spark, dir))
 
   /** [[neardupClusters]] with the components resolved by the
     * alternating-star algorithm — declared as its own query (oracle =
@@ -844,7 +811,7 @@ object Dedup {
     * certified at the ORACLE level, not only by the result-equality
     * spec on hand-built graphs. */
   def neardupClustersBigstar(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(neardupComponentsBigstar(spark, dir), (spark, dir, "bigstar"))
+    clustersFrom(spark, dir, "bigstar", neardupComponentsBigstar(spark, dir))
 
   // ---- SimHash ----
 
@@ -942,16 +909,6 @@ object Dedup {
     * .cellsFor]] replay contract). */
   def recallEvery(n: Long): Long = math.max(1L, n / RecallProbes)
 
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
-  /** Corpus doc count, memoized per (session, corpus). Reads the
-    * parquet directly (not Tables.load) so the count is a pure metadata
-    * job — the [[graft.similarity.Similarity]] vecCount idiom. */
-  private def docCount(spark: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(spark.read.parquet(s"$dir/documents.parquet").count()) })
-
   /** MinHash banding RECALL certification — the quality number the
     * whole text near-dup family rides on, put under the oracle (round-10
     * verdict #1): for a bounded probe sample, compare the docs whose
@@ -976,7 +933,7 @@ object Dedup {
     * applied to text. */
   def minhashRecall(spark: SparkSession, dir: String): DataFrame = {
     val docs = cachedDocShingles(spark, dir)
-    val every = recallEvery(docCount(spark, dir))
+    val every = recallEvery(Tables.rowCount(spark, dir, "documents"))
     val isProbe = (c: Column) => c % every === 0
 
     // exact truth, probe-restricted: the ngram_jaccard machinery with
@@ -1064,7 +1021,7 @@ object Dedup {
     * rule from COUNT(*). At e = 1 every doc is a probe and each slice
     * degenerates to its full query. */
   def sliceProbe(spark: SparkSession, dir: String): Column =
-    col("doc_id") % recallEvery(docCount(spark, dir)) <= 1
+    col("doc_id") % recallEvery(Tables.rowCount(spark, dir, "documents")) <= 1
 
   /** [[minhashCandidates]] restricted to pairs with a [[sliceProbe]]
     * endpoint — the same grouped-bucket pair expansion under the same
@@ -1077,7 +1034,7 @@ object Dedup {
     * list, nothing corpus-sized shuffles, output bounded by
     * probes · bands · cap. */
   private def slicedCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val every = recallEvery(docCount(spark, dir))
+    val every = recallEvery(Tables.rowCount(spark, dir, "documents"))
     val bands = cachedCorpusBands(spark, dir)
     val bandsP = bands.filter(col("doc_id") % every <= 1)
     val bucketRows = bands.join(
@@ -1159,7 +1116,7 @@ object Dedup {
   private[graft] def probeComponentClosure(spark: SparkSession, dir: String,
                                            bands: DataFrame): DataFrame = {
     val docs = cachedDocShingles(spark, dir)
-    val every = recallEvery(docCount(spark, dir))
+    val every = recallEvery(Tables.rowCount(spark, dir, "documents"))
     // one banding pass feeds every closure round — persist for the
     // loop, released before the (checkpoint-rooted) result returns.
     // An ALREADY-persisted frame (the session-memoized corpus bands)
@@ -1626,7 +1583,7 @@ object Dedup {
     // truth = exact probe-restricted Jaccard; candidates = the
     // production banding under the SAME occupancy cap — the oracle
     // derives the probe stride from COUNT(*) exactly like the Spark
-    // side's recallEvery(docCount). The probe restriction is applied
+    // side's recallEvery(Tables.rowCount). The probe restriction is applied
     // as an explicit MATERIALIZED probe-side frame BEFORE the shingle
     // self-join, not as a WHERE the optimizer may or may not push
     // below it: left as a post-join filter the a-side is the FULL

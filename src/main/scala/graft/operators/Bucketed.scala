@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Bucketed CO-LOCATED fact-fact join — the shuffle-elimination
   * mitigation for the one join class broadcast can't save: both sides
@@ -40,8 +38,7 @@ object Bucketed {
 
   val NumBuckets = 32
 
-  private val dbCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
+  private val bucketedDbMemo = SessionMemo.values[String, String]()
 
   /** Ensure bucketed twins of orders/lineitem exist for `dir`; returns
     * the database name. Memoized per (session, corpus). NOTE on fresh
@@ -57,7 +54,7 @@ object Bucketed {
     * lineitem — or a changed o_totalprice with keys and count
     * unchanged — silently reuse stale buckets). */
   def ensureBucketed(spark: SparkSession, dir: String): String =
-    dbCache.computeIfAbsent((spark, dir), { _ =>
+    bucketedDbMemo(spark, dir) {
       import spark.implicits._
       def fingerprint(table: String, cols: Seq[String]): (Long, Long) =
         Tables.load(spark, dir, table)
@@ -98,7 +95,7 @@ object Bucketed {
         Tables.load(spark, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice"), "l_orderkey")
       db
-    })
+    }
 
   /** Per-order item rollup over the bucketed twins: join + aggregate,
     * both on the bucket key, zero exchanges end to end. */

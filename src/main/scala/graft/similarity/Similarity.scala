@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -82,18 +82,7 @@ object Similarity {
     b
   }
 
-  private val ivfAssignCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Lifecycle hook mirroring [[graft.dedup.Dedup.clearCaches]]: drop
-    * this session's memoized IVF assignment frame and trained centroids. */
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark,
-      Seq(ivfAssignCache, exactTopkCache, vectorsCache))
-    centroidCache.keySet.removeIf(_._1 eq spark)
-    pqCache.keySet.removeIf(_._1 eq spark)
-    vecCountCache.keySet.removeIf(_._1 eq spark)
-  }
+  private val ivfAssignMemo = SessionMemo.frames[String]()
 
   /** Neighbor ranking order: sim desc, vec_id asc tie-break — shared by
     * every top-k aggregation in this module. */
@@ -107,11 +96,10 @@ object Similarity {
     * sites across the ANN/kNN/quantization family each re-paid the
     * load-balance probe and the norm pass. MEMORY_AND_DISK-evictable,
     * bounded at one entry per corpus. */
-  private val vectorsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val vectorsMemo = SessionMemo.values[String, DataFrame]()
 
   private def vectors(spark: SparkSession, dir: String): DataFrame =
-    vectorsCache.computeIfAbsent((spark, dir), { _ =>
+    vectorsMemo(spark, dir) {
       // Round-17 (r16 verdict #1, guide §5): the r16 persist of this
       // frame made ann_recall's WARM reps slower than cold at the
       // driver's local[32] config (13.3 s median vs 2.4 s at 8 cores) —
@@ -126,7 +114,7 @@ object Similarity {
       Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("nrm", norm(col("v")))
-    })
+    }
 
   /** Exact top-k: broadcast the probes, one pass over candidates, heap
     * aggregate per probe. */
@@ -209,18 +197,16 @@ object Similarity {
         round(col("n.sim"), 6).as("sim"))
   }
 
-  private val exactTopkCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val exactTopkMemo = SessionMemo.frames[String]()
 
   /** [[similarTopk]]'s (probe, neighbor) id pairs, persisted and
     * memoized per (session, corpus): [[annRecall]] probes it once per
     * ANN variant and the materialized frame is only K·NumProbes rows —
     * the memo turns three corpus passes into one. */
   private def cachedExactTopk(spark: SparkSession, dir: String): DataFrame =
-    exactTopkCache.computeIfAbsent((spark, dir), { _ =>
+    exactTopkMemo(spark, dir) {
       similarTopk(spark, dir).select("probe_id", "neighbor_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Recall@[[K]] of every ANN variant against the exact top-k scan —
     * the certification number that decides whether an approximate
@@ -279,8 +265,7 @@ object Similarity {
 
   /** [[cellsFor]] of the corpus under `dir` — rides the shared
     * [[vecCount]] memo (one count job per session+corpus for the IVF
-    * family AND the kNN-graph bits ladder; a second cache here was the
-    * round-8 review's stale-after-clearCaches finding). */
+    * family AND the kNN-graph bits ladder). */
   def ivfCellCount(spark: SparkSession, dir: String): Int =
     cellsFor(vecCount(spark, dir))
 
@@ -341,8 +326,7 @@ object Similarity {
     s
   }
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[Double]]]()
+  private val centroidMemo = SessionMemo.values[String, Array[Array[Double]]]()
 
   /** Deterministic Lloyd's k-means over the embedding column — replaces
     * round 2's "first C vectors" placeholder quantizer with a trained
@@ -478,7 +462,7 @@ object Similarity {
     * fresh centroids are bit-identical (BandIndexSpec pins the PQ
     * twin; the mechanism is shared). */
   def trainIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    centroidCache.computeIfAbsent((spark, dir), { _ =>
+    centroidMemo(spark, dir) {
       import spark.implicits._
       if (useHier(ivfCellCount(spark, dir)))
         hierState(spark, dir)._2.flatten
@@ -493,7 +477,7 @@ object Similarity {
         }
         stored.as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
       }
-    })
+    }
 
   // ---- two-level (hierarchical) coarse quantizer (round-12 verdict #3) ----
 
@@ -691,8 +675,8 @@ object Similarity {
       .toDF("vec_id", "cid")
   }
 
-  private val hierCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[Array[Double]], Array[Array[Array[Double]]])]()
+  private val hierMemo =
+    SessionMemo.values[String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
 
   /** Memoized + IndexStore-persisted two-level quantizer state for a
     * corpus: two fingerprint-keyed artifacts (supercentroids with
@@ -701,7 +685,7 @@ object Similarity {
     * persistence discipline as the flat centroids and PQ codebooks. */
   private[graft] def hierState(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    hierCache.computeIfAbsent((spark, dir), { _ =>
+    hierMemo(spark, dir) {
       import spark.implicits._
       val numCells = ivfCellCount(spark, dir)
       val s = superCountFor(numCells)
@@ -730,7 +714,7 @@ object Similarity {
       val cells = Array.tabulate(sup.length)(g =>
         flat.slice(offsets(g), offsets(g + 1)))
       (sup.map(_._3.toArray), cells)
-    })
+    }
 
   /** IVF-style ANN: assign every vector to its nearest of [[IvfCells]]
     * centroids (one narrow n×C scoring pass — centroids broadcast, no
@@ -776,40 +760,38 @@ object Similarity {
     * min-over-(−s, cid) election bit-for-bit — same dotA fold, same
     * division — so every oracle hash is unchanged. */
   private[graft] def ivfAssign(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfAssignCache.computeIfAbsent((spark, dir), { _ =>
+    ivfAssignMemo(spark, dir) {
       import spark.implicits._
       // beyond [[HierCellThreshold]] cells the flat n·C kernel is the
       // scale wall (round-12 verdict #3): assign supercluster-first —
       // n·(√C + C/√C). Every certified rung stays below the threshold,
       // so all existing hashes ride the flat branch bit-stable.
-      val assigned =
-        if (useHier(ivfCellCount(spark, dir))) {
-          val (sup, cells) = hierState(spark, dir)
-          ivfAssignHierOf(spark, dir, sup, cells)
-        } else {
-          val bc = spark.sparkContext.broadcast(trainIvfCentroids(spark, dir))
-          Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-            .as[(Long, Array[Double])]
-            .mapPartitions { it =>
-              val cs = bc.value
-              val cn = cs.map(c => math.sqrt(dotA(c, c)))
-              it.map { case (id, v) =>
-                val nv = math.sqrt(dotA(v, v))
-                var best = 0; var bs = Double.NegativeInfinity
-                var j = 0
-                while (j < cs.length) {
-                  val s = dotA(v, cs(j)) / (nv * cn(j))
-                  if (s > bs) { bs = s; best = j } // strict > : ties keep min cid
-                  j += 1
-                }
-                (id, best.toLong)
+      if (useHier(ivfCellCount(spark, dir))) {
+        val (sup, cells) = hierState(spark, dir)
+        ivfAssignHierOf(spark, dir, sup, cells)
+      } else {
+        val bc = spark.sparkContext.broadcast(trainIvfCentroids(spark, dir))
+        Tables.load(spark, dir, "embeddings")
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+          .as[(Long, Array[Double])]
+          .mapPartitions { it =>
+            val cs = bc.value
+            val cn = cs.map(c => math.sqrt(dotA(c, c)))
+            it.map { case (id, v) =>
+              val nv = math.sqrt(dotA(v, v))
+              var best = 0; var bs = Double.NegativeInfinity
+              var j = 0
+              while (j < cs.length) {
+                val s = dotA(v, cs(j)) / (nv * cn(j))
+                if (s > bs) { bs = s; best = j } // strict > : ties keep min cid
+                j += 1
               }
+              (id, best.toLong)
             }
-            .toDF("vec_id", "cid")
-        }
-      assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+          }
+          .toDF("vec_id", "cid")
+      }
+    }
 
   /** Cluster-balance profile of the corpus over the TRAINED k-means
     * cells — the "is my training mix topically skewed" audit that
@@ -1293,8 +1275,7 @@ object Similarity {
   private[graft] def PqIndexParams =
     s"dim=$Dim,m=$PqSubspaces,k=$PqK,iters=$PqIters,q=$QuantScale,res=ivf($IvfIndexParams)"
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[Array[Double]]]]()
+  private val pqMemo = SessionMemo.values[String, Array[Array[Array[Double]]]]()
 
   /** The per-subspace (vec_id, m, subvector, quantized subvector)
     * exploded frame the PQ trainer and scorer both consume — RESIDUAL
@@ -1361,7 +1342,7 @@ object Similarity {
     * encode pass touches the corpus. */
   private[graft] def trainPqCodebooks(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent((spark, dir), { _ =>
+    pqMemo(spark, dir) {
       import spark.implicits._
       val stored = graft.IndexStore.getOrBuild(spark, dir, "embeddings",
         "pq_codebooks", PqIndexParams) {
@@ -1379,7 +1360,7 @@ object Similarity {
           s"expected ${PqSubspaces * PqK}")
       val byKey = rows.map(r => (r._1, r._2) -> r._3.toArray).toMap
       Array.tabulate(PqSubspaces, PqK)((m, c) => byKey((m, c)))
-    })
+    }
 
   private[graft] def trainPqCodebooksFresh(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
@@ -1570,16 +1551,9 @@ object Similarity {
     b
   }
 
-  private val vecCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
-  /** Corpus vector count, memoized per (session, corpus). Reads the
-    * parquet directly (NOT through [[Tables.load]]) so the count is a
-    * pure metadata job — the kernel-table balance() guard would
-    * otherwise put a repartition shuffle under a row count. */
+  /** Corpus vector count, memoized per (session, corpus). */
   private def vecCount(spark: SparkSession, dir: String): Long =
-    vecCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(spark.read.parquet(s"$dir/embeddings.parquet").count()) })
+    Tables.rowCount(spark, dir, "embeddings")
 
   private val knnPlanesCache =
     new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Array[Double]]]]()

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.avro.mapred.AvroKey
@@ -11,14 +9,15 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 
 /** Avro source/sink round-trip — the mainstream ROW-oriented ingest
   * format beside the columnar parquet/ORC pair (Kafka pipelines and
   * CDC feeds overwhelmingly land as Avro container files). The
   * declared query writes the documents table to `.avro` container
-  * files once per corpus (fingerprint-keyed directory, `_SUCCESS`
-  * gated like the ORC twin), reads them BACK, and aggregates — while
+  * files once per corpus (an [[IndexStore]] layout keyed on the
+  * content fingerprint, like the ORC twin), reads them BACK, and
+  * aggregates — while
   * the ORACLE reads the ORIGINAL parquet: any field loss, string
   * mangling, or id drift across the Avro write/read cycle mismatches
   * the hash.
@@ -49,51 +48,36 @@ object AvroSource {
       |  {"name":"text","type":"string"}
       |]}""".stripMargin
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Write the documents table as Avro container files once per
-    * (session, corpus); returns the directory. The fingerprint covers
-    * count + text crc so regenerated fixtures get a fresh dir;
-    * `FileOutputCommitter`'s `_SUCCESS` marker gates cross-session
-    * reuse. */
+    * corpus fingerprint ([[IndexStore.getOrBuildLayout]]); returns the
+    * directory. */
   def avroDir(spark: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent((spark, dir), { _ =>
-      import spark.implicits._
-      val (n, fp) = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_avro_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-        AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(SchemaJson))
-        Tables.load(spark, dir, "documents")
-          .select("doc_id", "lang", "source", "text")
-          .rdd
-          .mapPartitions { it =>
-            // Schema is parsed per partition: cheaper than shipping a
-            // parsed Schema through the closure and immune to its
-            // serialization quirks across avro versions
-            val schema = new Schema.Parser().parse(SchemaJson)
-            it.map { row =>
-              val r = new GenericData.Record(schema)
-              r.put("doc_id", row.getLong(0))
-              r.put("lang", row.getString(1))
-              r.put("source", row.getString(2))
-              r.put("text", row.getString(3))
-              (new AvroKey[GenericRecord](r), NullWritable.get())
-            }
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "avro") { out =>
+      val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+      AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(SchemaJson))
+      Tables.load(spark, dir, "documents")
+        .select("doc_id", "lang", "source", "text")
+        .rdd
+        .mapPartitions { it =>
+          // Schema is parsed per partition: cheaper than shipping a
+          // parsed Schema through the closure and immune to its
+          // serialization quirks across avro versions
+          val schema = new Schema.Parser().parse(SchemaJson)
+          it.map { row =>
+            val r = new GenericData.Record(schema)
+            r.put("doc_id", row.getLong(0))
+            r.put("lang", row.getString(1))
+            r.put("source", row.getString(2))
+            r.put("text", row.getString(3))
+            (new AvroKey[GenericRecord](r), NullWritable.get())
           }
-          .saveAsNewAPIHadoopFile(
-            out.getAbsolutePath,
-            classOf[AvroKey[GenericRecord]], classOf[NullWritable],
-            classOf[AvroKeyOutputFormat[GenericRecord]],
-            job.getConfiguration)
-      }
-      out.getAbsolutePath
-    })
+        }
+        .saveAsNewAPIHadoopFile(
+          out.getAbsolutePath,
+          classOf[AvroKey[GenericRecord]], classOf[NullWritable],
+          classOf[AvroKeyOutputFormat[GenericRecord]],
+          job.getConfiguration)
+    }.getAbsolutePath
 
   /** Per-(lang, source) doc count, char total, and id checksum,
     * computed FROM THE AVRO COPY; the oracle computes the same from

@@ -1,18 +1,16 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 
 /** ORC source/sink round-trip — the second columnar format beside
   * parquet (built into Spark; vectorized reader, predicate pushdown,
   * column pruning all apply just like parquet). The declared query
   * writes the documents table to ORC once per corpus (executor-side
-  * `df.write.orc`, fingerprint-keyed directory like the binaryFile
-  * staging dir — regenerated fixtures get a fresh dir), reads it BACK
+  * `df.write.orc` into an [[IndexStore]] layout, keyed on the content
+  * fingerprint — regenerated fixtures get a fresh dir), reads it BACK
   * through `spark.read.orc`, and aggregates — while the ORACLE reads
   * the ORIGINAL parquet: any loss, truncation, or type drift in the
   * ORC write/read cycle mismatches the hash. PlanShapeSpec pins that
@@ -23,27 +21,13 @@ import graft.Tables
   * compare is the driver's oracle harness itself. */
 object OrcSource {
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Write the documents table as ORC once per (session, corpus);
-    * returns the directory. Spark's `_SUCCESS` marker gates reuse
-    * across sessions. */
+  /** Write the documents table as ORC once per corpus fingerprint;
+    * returns the directory. */
   def orcDir(spark: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent((spark, dir), { _ =>
-      import spark.implicits._
-      val (n, fp) = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_orc_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.load(spark, dir, "documents")
-          .write.mode("overwrite").orc(out.getAbsolutePath)
-      }
-      out.getAbsolutePath
-    })
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "orc") { out =>
+      Tables.load(spark, dir, "documents")
+        .write.mode("overwrite").orc(out.getAbsolutePath)
+    }.getAbsolutePath
 
   /** Per-lang doc count + total text chars, computed FROM THE ORC COPY;
     * the oracle computes the same from the original parquet. */

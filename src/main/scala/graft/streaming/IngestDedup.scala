@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.dedup.{BandIndex, Dedup}
 
 /** Streaming ingest dedup — the composition of the persisted standing
@@ -140,11 +140,10 @@ object IngestDedup {
     * every accepted doc_id. The DuckDB oracle unrolls the same fold
     * over from-scratch bands, so acceptance, ordering effects, and
     * the index-growth semantics are all under the hash. */
-  private val foldCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val foldMemo = SessionMemo.frames[String]()
 
   def ingestDedupFold(spark: SparkSession, dir: String): DataFrame =
-    foldCache.computeIfAbsent((spark, dir), { _ =>
+    foldMemo(spark, dir) {
       val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       // Every frame the fold shingles is a SUBSET OF THE CORPUS, so
       // ride the session-memoized corpus shingle frame instead of
@@ -160,7 +159,6 @@ object IngestDedup {
         .select("doc_id", "band", "sig")
       var known = docs.filter(col("doc_id") % 2 === 0)
       var accepted: Option[DataFrame] = None
-      val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       for (k <- Seq(1, 3, 5)) {
         val batch = docs.filter(col("doc_id") % 6 === k)
         // eagerly checkpoint each step's accepted ids (tiny: doc_ids
@@ -173,7 +171,6 @@ object IngestDedup {
         // materialized rows, so plan growth across the fold is linear.
         val acc = dedupStepWith(spark, batch, index, known, memoShingles)
           .localCheckpoint(true)
-        steps += acc
         val accDocs = docs.join(acc, Seq("doc_id"), "left_semi")
         index = index.unionByName(
           Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
@@ -183,18 +180,12 @@ object IngestDedup {
       }
       // the fold is inherently sequential state — memoized per
       // (session, corpus) like Dedup.cachedMinhashPairs, so one
-      // session runs the three barriers ONCE. Materialize the (tiny:
-      // accepted doc_ids only) union eagerly, then unpersist the
-      // per-step caches immediately: only the result frame stays
-      // cached, and it is swept by [[clearCaches]] — the per-step
-      // frames no longer outlive the call unreachable by any sweep
-      // (round-9 advice).
-      val result = accepted.get
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      result.count()
-      steps.foreach { s => s.unpersist(); () }
-      result
-    })
+      // session runs the three barriers ONCE. The memo persists the
+      // (tiny: accepted doc_ids only) union and owns the checkpointed
+      // step frames it reads: they stay until the session releases the
+      // entry, so losing the union's blocks recomputes it from them.
+      accepted.get
+    }
 
   /** Rows per compacted output file — the file-count bound the
     * compaction writes toward. Constant-width (doc_id, band, sig)
@@ -691,10 +682,6 @@ object IngestDedup {
       }
       .foreach(rmTree)
   }
-
-  /** Lifecycle hook, [[graft.dedup.Dedup.clearCaches]]'s contract. */
-  def clearCaches(spark: SparkSession): Unit =
-    graft.SessionCaches.clear(spark, Seq(foldCache))
 
   /** [[ingestDedupFold]]'s probe slice: the fold's accepted rows for
     * [[Dedup.sliceProbe]] docs (the fold is inherently sequential

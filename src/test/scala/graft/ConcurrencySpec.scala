@@ -32,7 +32,7 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     // drop this session's memos so all four threads race the SAME
     // computeIfAbsent on a cold cache
-    Dedup.clearCaches(spark)
+    SessionMemo.release(spark)
     val results = inThreads(4) { _ =>
       Dedup.cachedMinhashPairs(spark, sfDir)
         .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq

@@ -318,17 +318,25 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(pairs == Set((9000L, 9001L)))
   }
 
-  test("clearCaches drops session memos; queries rebuild cleanly after") {
+  test("SessionMemo.release drops session memos; queries rebuild cleanly after") {
     Dedup.cachedDocShingles(spark, sfDir).count()
     Dedup.cachedMinhashPairs(spark, sfDir).count()
     graft.operators.SqlSurface.minCostSupplier(spark, sfDir).count()
     graft.streaming.IngestDedup.ingestDedupFold(spark, sfDir).count()
-    Dedup.clearCaches(spark)
-    graft.similarity.Similarity.clearCaches(spark)
-    graft.operators.PageRank.clearCaches(spark)
-    graft.text.CorpusOps.clearCaches(spark)
-    graft.operators.SqlSurface.clearCaches(spark)
-    graft.streaming.IngestDedup.clearCaches(spark)
+    val batchBands = BandIndex.batchBands(spark, sfDir)
+    val bigrams = graft.text.TextAnalysis.cachedDocBigrams(spark, sfDir)
+    val artifact = IndexStore.indexDir(spark, sfDir, "documents", "release_spec")
+    val orders = Tables.load(spark, sfDir, "orders")
+    SessionMemo.release(spark)
+    assert(SessionMemo.entries(spark) == 0)
+    // the owners the old per-module sweep missed rebuild fresh entries
+    assert(!(BandIndex.batchBands(spark, sfDir) eq batchBands))
+    assert(BandIndex.neardupClustersIndexed(spark, sfDir).count() > 0)
+    assert(!(graft.text.TextAnalysis.cachedDocBigrams(spark, sfDir) eq bigrams))
+    assert(graft.text.TextAnalysis.lmDocLikelihood(spark, sfDir).count() > 0)
+    assert(IndexStore.indexDir(spark, sfDir, "documents", "release_spec") == artifact)
+    assert(!(Tables.load(spark, sfDir, "orders") eq orders))
+    assert(Tables.load(spark, sfDir, "orders").count() == orders.count())
     assert(graft.streaming.IngestDedup.ingestDedupFold(spark, sfDir).count() > 0)
     assert(Dedup.neardupClusters(spark, sfDir).count() > 0)
     assert(graft.similarity.Similarity.similarAnnIvf(spark, sfDir).count() > 0)

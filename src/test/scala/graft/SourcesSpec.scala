@@ -110,6 +110,28 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     assert(got == want)
   }
 
+  test("orc_roundtrip_agg: a corpus rewritten with the same text but new langs is not served stale") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_stale").toString
+    def write(lang: String): Unit =
+      Seq((1L, "alpha beta"), (2L, "gamma delta"))
+        .toDF("doc_id", "text")
+        .withColumn("lang", org.apache.spark.sql.functions.lit(lang))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def langs(): Set[String] = {
+      val session = spark.newSession()
+      try sources.OrcSource.orcRoundtripAgg(session, dir)
+        .select("lang").as[String].collect().toSet
+      finally SessionMemo.release(session)
+    }
+    try {
+      write("en")
+      assert(langs() == Set("en"))
+      write("fr")
+      assert(langs() == Set("fr"), "the ORC copy of the old corpus was reused")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("partitioned parquet write prunes partitions on read") {
     val dir = Files.createTempDirectory("pq").toString
     Tables.load(spark, sfDir, "events")

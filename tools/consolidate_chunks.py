@@ -1,10 +1,9 @@
 #!/usr/bin/env python3
 """Consolidate per-query oracle chunks into one committed artifact.
 
-Generalizes tools/consolidate_sf3.py (which is pinned to the r9/r10
-chunk layout): takes a chunk glob, an output path, and the expected
-query set. Refuses to write unless every chunk row is green and the
-query NAME SET matches exactly (not just the count — a chunk glob
+Takes a chunk glob, an output path, and the expected query set.
+Refuses to write unless every chunk row is green and the query NAME
+SET matches exactly (not just the count — a chunk glob
 that picks up a same-count but substituted query set, e.g. stale
 chunks from another round with a matching prefix, must not become a
 certification artifact). Duplicate keys across chunks are an error,
