@@ -50,8 +50,10 @@ object PlanAudit {
       "knn_graph_recall", "snapshot_expire",
       // round 13: the pair-bound slice twins (the probe-restricted
       // plans must stay broadcast-shaped like minhash_recall's) and
-      // the index-retention verb
-      "minhash_neardup_slice", "neardup_clusters_slice",
+      // the index-retention verb. neardup_clusters_slice is not here:
+      // its plan is a local relation, built by a driver loop whose
+      // shape DedupSpec's job-count spec guards
+      "minhash_neardup_slice",
       "knn_graph_lsh_slice", "ingest_dedup_fold_slice",
       "index_compact_slice", "index_expire",
       // round 14: the forced two-level quantizer census

@@ -97,7 +97,7 @@ object SessionMemo {
 
   /** `Dataset.unpersist` does not reach a checkpointed frame's blocks,
     * so those are unpersisted through the plan's `LogicalRDD` leaves. */
-  private def unpersist(df: DataFrame): Unit = {
+  private[graft] def unpersist(df: DataFrame): Unit = {
     df.unpersist()
     df.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist()

@@ -1,9 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.{SessionMemo, Tables}
 import graft.operators.ConnectedComponents
@@ -656,6 +660,13 @@ object Dedup {
       .join(docs.select(col("doc_id").as(rhs), col("sh").as("sh2"), size(col("sh")).as("n2")), rhs)
       .withColumn("c", size(array_intersect(col("sh1"), col("sh2"))).cast(LongType))
 
+  /** [[verifiedIntersections]]' Jaccard acceptance for one pair on the
+    * driver: `c` distinct shared shingles, `c / (n1 + n2 - c) >= 0.5`. */
+  private[graft] def jaccard(sh1: Array[String], sh2: Array[String]): Boolean = {
+    val c = sh1.toSet.intersect(sh2.toSet).size
+    c.toDouble / (sh1.length + sh2.length - c).toDouble >= 0.5
+  }
+
   def minhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     val docs = cachedDocShingles(spark, dir)
     val cand = minhashCandidates(cachedCorpusBands(spark, dir))
@@ -1077,162 +1088,107 @@ object Dedup {
       .select(col("d1"), col("d2"), round(cont, 6).as("containment"))
   }
 
-  /** Probe-seeded component closure over a banded candidate frame —
-    * the engine twin of the cluster-slice oracle's frontier unroll
-    * (round-13 verdict #7): BFS from each [[sliceProbe]] doc over
-    * VERIFIED near-dup edges, with edges computed ON DEMAND for each
-    * round's frontier (bucket join under the global [[MaxBucket]] cap
-    * + exact-Jaccard verify), so the engine's work per round is
-    * bounded by frontier · bands · cap — the probes' component
-    * volume, never the corpus pair graph. Through round 13 the
-    * cluster slices filtered the FULL resolution (labels are global
-    * state), which kept them Σf²-bound on the engine side and
-    * excluded from sf30+ bench rungs; this closure makes them
-    * end-to-end linear, while the full cluster queries stay
-    * [[graft.Bench.PairBoundQueries]]-tiered.
+  /** Probe-seeded component closure, the engine twin of the
+    * cluster-slice oracle's frontier unroll: BFS from each
+    * [[sliceProbe]] doc over verified near-dup edges, computed on
+    * demand for each round's frontier. It is a driver loop over two
+    * RDDs planned once per call: the `bands` rows `(doc_id, band, sig)`
+    * and the memoized shingles `(doc_id, sh)`. Its state lives on the
+    * driver: `reached` (probe → docs), the frontier `(probe, doc)` and
+    * the shingles and band keys fetched so far. All of it is bounded by
+    * the slice contract (probes · component volume), never by the
+    * corpus pair graph, so the slice stays linear at every SF while the
+    * full cluster queries stay [[graft.Bench.PairBoundQueries]]-tiered.
     *
-    * Equality contract: at fixpoint the closure IS the probe's whole
+    * One job fetches the probes' band keys. Each round then runs at
+    * most two jobs, and no plan is analysed or optimized inside the
+    * loop:
+    *  1. the frontier's buckets, whole. A partition ships at most
+    *     [[MaxBucket]] + 1 rows per key, and a bucket whose total
+    *     passes [[MaxBucket]] is dropped: the full query's global cap;
+    *  2. the new candidates' shingles and band keys. The driver keeps
+    *     the pairs [[jaccard]] accepts, and their keys feed the next
+    *     round.
+    * The call persists nothing and destroys its broadcasts; the result
+    * is a local frame.
+    *
+    * Equality contract: at fixpoint the closure is the probe's whole
     * component, so (min member id, member count) equal the full
-    * resolution's label and size — DedupSpec pins slice ≡
-    * full-filtered per mode, and the slice oracle hashes are
-    * unchanged. The rounds cap mirrors the oracle's fixed unroll
-    * ([[ComponentOracleRounds]]); near-dup components are dup-family
-    * near-cliques (diameter 1–2), and an insufficient cap lands as a
-    * wrong label — a red row — never a silent pass. Because the
-    * oracle unrolls the SAME depth, a crafted over-diameter component
-    * could make both sides agree on a truncated answer — DedupSpec's
-    * sliding-window chain specs pin that regime: a component whose
-    * positional extent exceeds the budget visibly diverges from the
-    * cap-free full resolution (the suite's guard), while cap-safe
-    * shapes reach fixpoint early and match it exactly.
-    *
-    * Plan shape per round: the banding frame streams against a
-    * broadcast frontier-bucket list; frontier-hit buckets are kept
-    * WHOLE by the semi-join so the window occupancy equals the full
-    * census and every cap decision is the full query's; the verify
-    * join runs on the round's deduped candidate pairs only. Frontier
-    * state is `localCheckpoint`ed per round (the
-    * [[graft.operators.ConnectedComponents]] lineage discipline). */
+    * resolution's label and size; DedupSpec pins slice ≡ full-filtered
+    * per mode. The rounds cap mirrors the oracle's fixed unroll
+    * ([[ComponentOracleRounds]]). Near-dup components are near-cliques
+    * of diameter 1–2. Because the oracle unrolls the same depth, an
+    * over-diameter component could make both sides agree on a truncated
+    * answer; DedupSpec's sliding-window chain specs pin that such a
+    * component visibly diverges from the cap-free full resolution,
+    * while cap-safe shapes reach fixpoint early and match it. */
   private[graft] def probeComponentClosure(spark: SparkSession, dir: String,
                                            bands: DataFrame): DataFrame = {
-    val docs = cachedDocShingles(spark, dir)
+    type Key = (Int, String)
     val every = recallEvery(Tables.rowCount(spark, dir, "documents"))
-    // one banding pass feeds every closure round — persist for the
-    // loop, released before the (checkpoint-rooted) result returns.
-    // An ALREADY-persisted frame (the session-memoized corpus bands)
-    // is used as-is and left alone: unpersisting it here would evict
-    // every sibling query's memo.
-    val prePersisted =
-      bands.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val b = if (prePersisted) bands
-      else bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Bucket occupancy is a property of the BANDS FRAME ALONE — the
-    // old per-round shape (semi-join the corpus bands down to
-    // frontier-hit buckets, then window-count within) recomputed the
-    // identical occupancy for every round's frontier, because the
-    // semi-join kept buckets whole, making the windowed count equal
-    // the corpus-wide count by construction. Round-17 (guide §1.2 —
-    // don't compute things twice, §2.3 shuffle fewer bytes): compute
-    // the OVER-CAP bucket list once per closure call — a map-side-
-    // aggregated groupBy whose shuffle carries bucket counts, never
-    // band rows, and whose result is tiny by construction (a bucket
-    // lands here only past [[MaxBucket]] members, so the list is
-    // ≤ |bands|/MaxBucket rows) — and each round replaces the
-    // {semi-join + window sort} pair with one broadcast anti join
-    // against it. One checkpointed row-count job per invocation
-    // instead of a window shuffle per round.
-    val hotBuckets = b.groupBy("band", "sig")
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > MaxBucket)
-      .select("band", "sig")
-      .localCheckpoint(true)
-    try {
-      var reached = Tables.load(spark, dir, "documents")
-        .filter(col("doc_id") % every <= 1)
-        .select(col("doc_id").as("p"), col("doc_id").as("d"))
-        .localCheckpoint(true)
-      var frontier = reached
-      var round = 0
-      while (round < ComponentOracleRounds && !frontier.isEmpty) {
-        // (A fused no-intermediate-checkpoint variant was measured in
-        // round 16 and REJECTED: collapsing the round into one action
-        // duplicated the window/distinct subtrees past what
-        // ReusedExchange recovers — 3.6→4.9 s. The eager per-stage
-        // checkpoints stay; the win below is the probe-bounded verify.)
-        // the frontier docs' band rows (≤ frontier·bands — broadcast
-        // side; referenced once per round since the occupancy hoist,
-        // so no checkpoint — the one consumer builds it directly)
-        val fBands = b.join(
-            broadcast(frontier.select(col("d").as("doc_id")).distinct()),
-            Seq("doc_id"))
-          .select(col("doc_id").as("d1"), col("band"), col("sig"))
-        val partners = b
-          .join(broadcast(fBands), Seq("band", "sig"))
-          .filter(col("doc_id") =!= col("d1"))
-          .join(broadcast(hotBuckets), Seq("band", "sig"), "left_anti")
-          .select(col("d1"), col("doc_id").as("d2"))
-          .distinct()
-        // attach probes; prune (p, d2) already closed BEFORE the
-        // verify join (the oracle prunes AFTER via EXCEPT — same sets,
-        // pruning early only drops verify work)
-        // (A fully-fused round — pPairs and vdocs NOT checkpointed,
-        // leaning on ReusedExchange inside the one action — was
-        // re-measured in round 17 after the occupancy hoist and is
-        // STILL slower: 45 → 59 AQE stage-jobs, 4.7 → 5.2 s warm. The
-        // three references to pPairs re-derive the partners pipeline
-        // past what exchange reuse recovers. The per-stage eager
-        // checkpoints stay.)
-        val pPairs = partners
-          .join(broadcast(frontier.withColumnRenamed("d", "d1")), Seq("d1"))
-          .join(reached.withColumnRenamed("d", "d2"), Seq("p", "d2"), "left_anti")
-          .localCheckpoint(true)
-        val jac = col("c").cast(DoubleType) /
-          (col("n1") + col("n2") - col("c")).cast(DoubleType)
-        // Probe-bounded verify (round-16 optimization; guide §2.4 —
-        // remove shuffles outright): the round's candidate set is
-        // ≤ frontier·bands·[[MaxBucket]] pairs BY DESIGN (that is the
-        // slice family's contract), so unlike the corpus-bound verifies
-        // this one may cut the docs side down FIRST — a broadcast
-        // semi-join on the candidates' id list (longs; ≤2·|cands| of
-        // them) leaves a docs subset of component size, and the
-        // shared merge-pinned verify then sorts hundreds of rows, not
-        // the corpus. The previous shape re-shuffled the FULL persisted
-        // shingle frame by d1 and d2 EVERY round (plan audit: 2 corpus
-        // Exchanges per round; shuffle reuse never fires across the
-        // loop's separate actions). Results are identical — the semi-
-        // join drops only docs no candidate pair references.
-        val cands = pPairs.select("d1", "d2").distinct()
-        val candIds = cands.select(col("d1").as("doc_id"))
-          .union(cands.select(col("d2").as("doc_id"))).distinct()
-        val vdocs = docs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        val verified = verifiedIntersections(vdocs, cands, "d1", "d2")
-          .filter(jac >= 0.5).select("d1", "d2")
-        val fresh = pPairs.join(verified, Seq("d1", "d2"), "left_semi")
-          .select(col("p"), col("d2").as("d")).distinct()
-          .localCheckpoint(true)
-        // reached stays a LAZY union of the per-round checkpointed
-        // frames (round-17; guide §1.2 job-count trim): every member
-        // is already materialized, so checkpointing the union spent
-        // one more blocking job per round only to re-copy cached
-        // blocks. The union's readers (the per-round anti join, the
-        // final agg) scan the same cached partitions either way.
-        reached = reached.unionByName(fresh)
-        frontier = fresh
-        round += 1
+    val bandRows = bands.select(col("doc_id"), col("band"), col("sig")).rdd
+      .map(r => (r.getLong(0), (r.getInt(1), r.getString(2))))
+    val shingleRows = cachedDocShingles(spark, dir).select("doc_id", "sh").rdd
+    def withBroadcast[K, R](keys: Set[K])(job: Broadcast[Set[K]] => R): R = {
+      val b = spark.sparkContext.broadcast(keys)
+      try job(b) finally b.destroy()
+    }
+
+    val keysOf = mutable.Map.empty[Long, Array[Key]].withDefaultValue(Array.empty)
+    keysOf ++= bandRows.filter(_._1 % every <= 1).collect().groupMap(_._1)(_._2)
+    val shOf = mutable.Map.empty[Long, Array[String]].withDefaultValue(Array.empty)
+    val reached = mutable.Map.empty[Long, mutable.Set[Long]]
+    keysOf.keys.foreach(p => reached(p) = mutable.Set(p))
+    var frontier = reached.keys.toSeq.map(p => (p, p))
+    var round = 0
+    while (round < ComponentOracleRounds && frontier.nonEmpty) {
+      val want = frontier.flatMap(f => keysOf(f._2)).toSet
+      val buckets = withBroadcast(want) { w =>
+        bandRows.mapPartitions { it =>
+          val seen = mutable.Map.empty[Key, Int]
+          it.filter { case (_, k) =>
+            w.value(k) && { seen(k) = seen.getOrElse(k, 0) + 1; seen(k) <= MaxBucket + 1 }
+          }
+        }.collect()
+      }.groupMap(_._2)(_._1).filter(_._2.length <= MaxBucket).withDefaultValue(Array.empty)
+      val cands = (for {
+        (p, d) <- frontier
+        k <- keysOf(d).iterator
+        d2 <- buckets(k).iterator
+        if d2 != d && !reached(p)(d2)
+      } yield (p, d, d2)).distinct
+      val missing = cands.flatMap(c => Seq(c._2, c._3)).toSet -- shOf.keySet
+      if (missing.nonEmpty) {
+        type Got = (Long, Either[Array[String], Key])
+        val got = withBroadcast(missing) { m =>
+          shingleRows.filter(r => m.value(r.getLong(0)))
+            .map[Got](r => (r.getLong(0), Left(r.getSeq[String](1).toArray)))
+            .union(bandRows.filter(r => m.value(r._1)).map[Got](r => (r._1, Right(r._2))))
+            .collect()
+        }
+        got.foreach { case (d, Left(sh)) => shOf(d) = sh; case _ => () }
+        keysOf ++= got.collect { case (d, Right(k)) => (d, k) }.groupMap(_._1)(_._2)
       }
-      reached.groupBy("p").agg(
-          min(col("d")).as("cluster_id"),
-          countDistinct(col("d")).as("cluster_size"))
-        .filter(col("cluster_size") > 1)
-        .select(col("p").as("doc_id"), col("cluster_id"), col("cluster_size"))
-    } finally { if (!prePersisted) b.unpersist(); () }
+      frontier = cands.collect {
+        case (p, d, d2) if jaccard(shOf(d), shOf(d2)) => (p, d2)
+      }.distinct
+      frontier.foreach { case (p, d2) => reached(p) += d2 }
+      round += 1
+    }
+    val rows = reached.toSeq.collect {
+      case (p, ds) if ds.size > 1 => Row(p, ds.min, ds.size.toLong)
+    }
+    spark.createDataFrame(rows.asJava, ClusterSchema)
   }
 
+  /** The cluster queries' row shape, `(doc_id, cluster_id, cluster_size)`. */
+  private val ClusterSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("cluster_id", LongType),
+    StructField("cluster_size", LongType, nullable = false)))
+
   /** [[neardupClusters]]' probe slice: the probe docs' component rows
-    * via [[probeComponentClosure]] over the recomputed banding frame —
-    * end-to-end probe-bounded since round 14 (the oracle was always
-    * the frontier unroll; now the engine is too). */
+    * via [[probeComponentClosure]] over the memoized corpus banding
+    * frame, probe-bounded end to end like its frontier-unroll oracle. */
   def neardupClustersSlice(spark: SparkSession, dir: String): DataFrame =
     probeComponentClosure(spark, dir, cachedCorpusBands(spark, dir))
 

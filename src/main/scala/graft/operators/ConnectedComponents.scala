@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
+import graft.SessionMemo
+
 /** Connected components over an undirected edge list, in pure DataFrame
   * algebra (no graph library): iterative min-label propagation.
   *
@@ -87,10 +89,13 @@ object ConnectedComponents {
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
 
-    // reliable-mode rounds leave one ReliableCheckpointRDD directory
-    // each; delete a superseded round's files as soon as its successor
-    // is materialized (the fs handle comes from the frame's own conf)
-    def dropCheckpointFiles(df: DataFrame): Unit =
+    // release a superseded round as soon as its successor is
+    // materialized: its blocks, which `Dataset.unpersist` does not reach
+    // on a checkpointed frame, and in reliable mode its
+    // ReliableCheckpointRDD directory (the fs handle comes from the
+    // frame's own conf)
+    def release(df: DataFrame): Unit = {
+      SessionMemo.unpersist(df)
       if (checkpointDir.isDefined) df.queryExecution.logical match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.getCheckpointFile.foreach { f =>
@@ -100,6 +105,7 @@ object ConnectedComponents {
           }
         case _ => ()
       }
+    }
 
     try {
       val e = edges.select(col(srcCol).cast("long").as("src"),
@@ -124,20 +130,17 @@ object ConnectedComponents {
         val converged = s.isEmpty ||
           prevSum.exists(_.compareTo(s.get) == 0)
         if (converged) {
-          next.unpersist() // fixpoint: next == labels elementwise
-          dropCheckpointFiles(next)
+          release(next) // fixpoint: next == labels elementwise
           sym.unpersist()
           return labels
         }
-        labels.unpersist()
-        dropCheckpointFiles(labels) // next is materialized; round N files done
+        release(labels) // next is materialized; round N is done
         labels = next
         prevSum = s
         iter += 1
       }
       sym.unpersist()
-      labels.unpersist()
-      dropCheckpointFiles(labels)
+      release(labels)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds")
     } finally
@@ -191,7 +194,8 @@ object ConnectedComponents {
     def truncate(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    def dropCheckpointFiles(df: DataFrame): Unit =
+    def release(df: DataFrame): Unit = {
+      SessionMemo.unpersist(df)
       if (checkpointDir.isDefined) df.queryExecution.logical match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.getCheckpointFile.foreach { f =>
@@ -201,6 +205,7 @@ object ConnectedComponents {
           }
         case _ => ()
       }
+    }
 
     // m(u) = min(N(u) ∪ {u}) over the symmetrized frame, then link
     // strictly larger neighbors to it; emitted edges are naturally
@@ -247,16 +252,16 @@ object ConnectedComponents {
         converged = next.count() == e.count() &&
           next.except(e).isEmpty
         if (!converged) {
-          e.unpersist(); dropCheckpointFiles(e)
+          release(e)
           e = next
           iter += 1
         } else {
-          next.unpersist(); dropCheckpointFiles(next)
+          release(next)
         }
       }
       if (!converged) {
-        nodes.unpersist(); dropCheckpointFiles(nodes)
-        e.unpersist(); dropCheckpointFiles(e)
+        release(nodes)
+        release(e)
         throw new IllegalStateException(
           s"alternating connected components did not converge in $maxIters rounds")
       }
@@ -268,8 +273,8 @@ object ConnectedComponents {
           Seq("id"), "left")
         .select(col("id"), coalesce(col("star"), col("id")).as("label"))
       val out = truncate(labels)
-      nodes.unpersist(); dropCheckpointFiles(nodes)
-      e.unpersist(); dropCheckpointFiles(e)
+      release(nodes)
+      release(e)
       (out, iter + 1)
     } finally
       org.apache.spark.graft.CheckpointDirAccessor.restore(sc, priorDir)

@@ -1,11 +1,61 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{BandIndex, Dedup}
+import graft.operators.ConnectedComponents
 
-class DedupSpec extends AnyFunSuite with SharedSpark {
+class DedupSpec extends AnyFunSuite with SharedSpark with BeforeAndAfterAll {
+
+  /** Temp corpora and artifacts this suite writes, deleted in [[afterAll]]. */
+  private val tempDirs = scala.collection.mutable.Buffer.empty[java.io.File]
+
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
+
+  /** Jobs that `body` starts, with its result. A marker job before and
+    * after flushes the listener bus, which delivers events in order. */
+  private def jobsRunBy[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.put(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def jobsUntil(marker: String): Int = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      var n = 0
+      var d = started.poll(1, TimeUnit.MINUTES)
+      while (d != marker) {
+        assert(d != null, "listener bus stalled")
+        n += 1
+        d = started.poll(1, TimeUnit.MINUTES)
+      }
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      jobsUntil("dedupspec-marker-before")
+      val out = body
+      (jobsUntil("dedupspec-marker-after"), out)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("shingles: distinct word 3-grams, empties dropped, short docs empty") {
     import spark.implicits._
@@ -299,23 +349,64 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(viaMap.nonEmpty)
   }
 
-  test("minhash hot-bucket cap drops degenerate clusters, keeps honest pairs") {
+  /** Synthetic corpus: one degenerate cluster of MaxBucket+1 identical
+    * docs (every LSH bucket explodes quadratically without the cap)
+    * plus one honest near-dup pair, 9000/9001. */
+  private lazy val hotBucketDir: String = {
     import spark.implicits._
-    // synthetic corpus: one degenerate cluster of MaxBucket+1 identical
-    // docs (every LSH bucket explodes quadratically without the cap)
-    // plus one honest near-dup pair
     val cluster = (0L until (Dedup.MaxBucket + 1).toLong)
       .map(i => (i, "the quick brown fox jumps over the lazy dog again and again"))
     val pairA = (9000L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
     val pairB = (9001L, "alpha beta gamma delta epsilon zeta eta theta iota kappa x")
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotbucket").toString
+    val dir = tempDir("graft_hotbucket")
     (cluster :+ pairA :+ pairB).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("minhash hot-bucket cap drops degenerate clusters, keeps honest pairs") {
+    import spark.implicits._
+    val dir = hotBucketDir
     val pairs = Dedup.minhashNeardup(spark, dir)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     // the 1001-doc cluster would contribute 500500 pairs; the cap drops
     // its buckets entirely, leaving only the honest pair
     assert(pairs == Set((9000L, 9001L)))
+  }
+
+  test("probe closure: the hot-bucket cap drops the degenerate cluster in both " +
+    "slice modes and keeps the honest pair") {
+    import spark.implicits._
+    val dir = hotBucketDir
+    val every = Dedup.recallEvery(Dedup.MaxBucket + 3L)
+    val expected = Dedup.neardupClusters(spark, dir)
+      .as[(Long, Long, Long)].collect().toSet.filter(_._1 % every <= 1)
+    assert(expected.contains((9000L, 9000L, 2L)))
+    assert(expected.forall(_._1 >= 9000L), s"an over-cap doc clustered: $expected")
+    for ((mode, df) <- Seq(
+        "prop" -> Dedup.neardupClustersSlice(spark, dir),
+        "indexed" -> BandIndex.neardupClustersIndexedSlice(spark, dir))) {
+      assert(df.as[(Long, Long, Long)].collect().toSet == expected,
+        s"cluster slice mode $mode diverged")
+    }
+    tempDirs += IndexStore.indexDir(spark, dir, "documents", "minhash_bands",
+      Dedup.MinhashIndexParams)
+  }
+
+  test("probe closure: a warm slice call runs a bounded number of jobs and " +
+    "leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    def call(): Set[Row] = Dedup.neardupClustersSlice(spark, sfDir).collect().toSet
+    val cold = call() // builds the session memos a warm call reads
+    val before = sc.getPersistentRDDs.keySet
+    val (jobs, warm) = jobsRunBy(call())
+    assert(warm == cold)
+    // measured 4 at this fixture: the probes' band keys, one round's
+    // bucket and candidate fetches, and the bucket fetch of the round
+    // that finds nothing new (the DataFrame closure it replaced ran 45)
+    assert(jobs <= 4, s"a warm slice call ran $jobs jobs")
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"the call left persisted RDDs ${sc.getPersistentRDDs.keySet -- before}")
   }
 
   test("SessionMemo.release drops session memos; queries rebuild cleanly after") {
@@ -355,7 +446,7 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
       (3L, "completely different words nothing shared here at all today friends"), // unique
       (5L, "so short"), // no shingles -> no bands -> accepted
       (7L, "one two three four five six seven eight nine ten")) // exact dup of 2
-    val dir = java.nio.file.Files.createTempDirectory("graft_minc").toString
+    val dir = tempDir("graft_minc")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val surv = Dedup.minhashIncremental(spark, dir)
@@ -370,7 +461,7 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     val docs = Seq(
       (1L, quoted),
       (2L, quoted + " phi chi")) // contains doc 1 wholly
-    val dir = java.nio.file.Files.createTempDirectory("graft_cont").toString
+    val dir = tempDir("graft_cont")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val got = Dedup.shingleContainment(spark, dir)
@@ -502,6 +593,24 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
       s"chain of $n should contract in <= $bound alternating rounds, took $rounds")
   }
 
+  test("connected components release superseded rounds: only the returned " +
+    "frame's RDD stays persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a diameter-6 path: several rounds, each one checkpointed
+    val edges = (0L until 6L).map(i => (i, i + 1)).toDF("a", "b")
+    for ((mode, resolve) <- Seq[(String, () => DataFrame)](
+        "propagation" -> (() => ConnectedComponents.resolve(edges, "a", "b")),
+        "alternating" -> (() => ConnectedComponents.resolveAlternating(edges, "a", "b")))) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = resolve()
+      val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(own.nonEmpty && sc.getPersistentRDDs.keySet -- before == own,
+        s"$mode left superseded rounds persisted: ${sc.getPersistentRDDs.keySet -- before -- own}")
+      SessionMemo.unpersist(out)
+    }
+  }
+
   test("connected components: reliable-checkpoint mode labels == localCheckpoint labels") {
     import spark.implicits._
     val rnd = new scala.util.Random(7) // fixed seed: deterministic test
@@ -512,37 +621,31 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     val local = graft.operators.ConnectedComponents
       .resolve(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_cc_ckpt").toString
-    try {
-      val dirBefore = org.apache.spark.graft.CheckpointDirAccessor
-        .get(spark.sparkContext)
-      val reliableDf = graft.operators.ConnectedComponents
-        .resolve(edges, "a", "b", checkpointDir = Some(ckptDir))
-      // hygiene: the global checkpoint dir is restored verbatim (here:
-      // back to unset) — the override never leaks to the shared session
-      assert(org.apache.spark.graft.CheckpointDirAccessor
-        .get(spark.sparkContext) == dirBefore,
-        "resolve leaked its checkpoint dir into the shared session")
-      val reliable = reliableDf.as[(Long, Long)].collect().toMap
-      assert(reliable == local)
-      // reliable mode actually wrote round snapshots to the shared dir
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "reliable checkpoint wrote nothing")
-      // and superseded rounds were reaped as the run went: the
-      // diameter-15 path forces ~15 rounds, but only the RETURNED
-      // frame's snapshot may remain on disk
-      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("rdd-"))
-        .count()
-      assert(rddDirs == 1,
-        s"expected exactly the returned frame's snapshot, found $rddDirs rdd-* dirs")
-    } finally {
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(ckptDir))
-    }
+    val ckptDir = tempDir("graft_cc_ckpt")
+    val dirBefore = org.apache.spark.graft.CheckpointDirAccessor
+      .get(spark.sparkContext)
+    val reliableDf = graft.operators.ConnectedComponents
+      .resolve(edges, "a", "b", checkpointDir = Some(ckptDir))
+    // hygiene: the global checkpoint dir is restored verbatim (here:
+    // back to unset) — the override never leaks to the shared session
+    assert(org.apache.spark.graft.CheckpointDirAccessor
+      .get(spark.sparkContext) == dirBefore,
+      "resolve leaked its checkpoint dir into the shared session")
+    val reliable = reliableDf.as[(Long, Long)].collect().toMap
+    assert(reliable == local)
+    // reliable mode actually wrote round snapshots to the shared dir
+    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
+    assert(wrote > 0, "reliable checkpoint wrote nothing")
+    // and superseded rounds were reaped as the run went: the
+    // diameter-15 path forces ~15 rounds, but only the RETURNED
+    // frame's snapshot may remain on disk
+    val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
+      .filter(p => java.nio.file.Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("rdd-"))
+      .count()
+    assert(rddDirs == 1,
+      s"expected exactly the returned frame's snapshot, found $rddDirs rdd-* dirs")
   }
 
   test("neardup_clusters: cluster_id is the min member, sizes agree, survivors filter") {
@@ -623,7 +726,7 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     * of what the banding surfaces. */
   private def writeChainCorpus(n: Int, tag: String): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_chain_$tag").toString
+    val dir = tempDir(s"graft_chain_$tag")
     val words = (0 until n + 51).map(i => s"cw$i")
     (0 until n).map(i => (i.toLong, words.slice(i, i + 52).mkString(" ")))
       .toDF("doc_id", "text")
